@@ -32,8 +32,11 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from mini_sql_engine_spark.streaming.windows import (
+    NO_DATA_BATCHES,
     events_stream,
+    replay,
     stream_to_df,
+    tumbling_counts,
 )
 
 HORIZON = "1 hour"
@@ -131,48 +134,21 @@ def stream_available_now(spark: SparkSession, sf_dir: str) -> DataFrame:
     by running multiple bounded micro-batches. Result must equal the
     continuous replay of the same watermarked tumbling aggregation, so
     it shares ``stream_tumbling_counts``'s batch oracle."""
-    import os
-    import tempfile
-    import uuid
-
-    from mini_sql_engine_spark.streaming.windows import (
-        events_stream,
-        tumbling_counts,
+    writer = (
+        tumbling_counts(events_stream(spark, sf_dir))
+        .writeStream.format("memory")
+        .outputMode("complete")
+        .trigger(availableNow=True)
     )
-
-    name = f"mem_{uuid.uuid4().hex[:12]}"
-    chk = os.path.join(tempfile.gettempdir(), f"chk_{name}")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    prev_nodata = spark.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled"
+    # 4 state partitions: JVM stateful (see stream_to_df). Complete
+    # mode re-emits the full aggregate every batch, so the final
+    # no-data batch recomputes an identical table — skip it.
+    return replay(
+        spark,
+        writer,
+        {"spark.sql.shuffle.partitions": "4", NO_DATA_BATCHES: "false"},
+        memory=True,
     )
-    spark.conf.set("spark.sql.shuffle.partitions", "4")  # JVM stateful
-    # bounded micro-batches, statically planned — AQE only adds a
-    # per-exchange stage round-trip per batch (see stream_to_df)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    # complete mode re-emits the full aggregate every batch, so the
-    # final no-data batch recomputes an identical table (stream_to_df
-    # docstring) — skip its full zero-row trigger
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try:
-        q = (
-            tumbling_counts(events_stream(spark, sf_dir))
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()  # AvailableNow self-terminates when drained
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_nodata
-        )
-    return spark.table(name)
 
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {

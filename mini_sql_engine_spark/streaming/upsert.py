@@ -296,31 +296,30 @@ def _multi_file_events(
     )
 
 
-def run_upsert_stream(
+def _merge_stream(
     spark: SparkSession,
-    sf_dir: str,
+    stream: DataFrame,
+    merge: Callable[[DataFrame, int, str, str], None],
     data_dir: str,
-    table: str = "user_totals",
-    n_files: int = 4,
+    table: str,
+    parts: int,
+    aqe: bool = True,
 ) -> None:
-    """Run the events stream to completion, merging every micro-batch
-    into the native-format state table at data_dir."""
-    chk = tempfile.mkdtemp(prefix=f"chk_upsert_{table}_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            _multi_file_events(spark, sf_dir, n_files)
-            .writeStream.foreachBatch(
-                lambda df, bid: merge_batch(df, bid, data_dir, table)
-            )
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    """Drain ``stream`` (AvailableNow) through the versioned
+    foreachBatch MERGE ``merge`` into the native table at
+    ``data_dir``/``table``, with ``parts`` shuffle partitions per
+    merge; ``aqe=False`` plans every batch's merge statically (see
+    stream_merkle_root)."""
+    from mini_sql_engine_spark.streaming.windows import replay
+
+    _enable_native_pushdown(spark)
+    confs = {"spark.sql.shuffle.partitions": str(parts)}
+    if not aqe:
+        confs["spark.sql.adaptive.enabled"] = "false"
+    writer = stream.writeStream.foreachBatch(
+        lambda df, bid: merge(df, bid, data_dir, table)
+    ).trigger(availableNow=True)
+    replay(spark, writer, confs)
 
 
 def stream_upsert_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -328,9 +327,11 @@ def stream_upsert_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     once micro-batch commits of the foreachBatch MERGE sink, then read the final native-format
     table back. Equals the one-shot batch aggregate (the DuckDB
     oracle) because integer-cent deltas accumulate associatively."""
-    _enable_native_pushdown(spark)
     data_dir = tempfile.mkdtemp(prefix="minisql_upsert_")
-    run_upsert_stream(spark, sf_dir, data_dir)
+    _merge_stream(
+        spark, _multi_file_events(spark, sf_dir), merge_batch, data_dir,
+        "user_totals", 8,
+    )
     state = _read_state(spark, data_dir, "user_totals",
                         schema="user_id long, n_events long, total_cents long")
     return state.filter(F.col("user_id") != SENTINEL_KEY).select(
@@ -414,32 +415,22 @@ def stream_native_sink_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     fragment manifests instead. State in the STREAM is zero (stateless
     passthrough); exactly-once lives entirely in the sink's commit
     log."""
-    import tempfile
-
-    from mini_sql_engine_spark.catalog import load_table
+    from mini_sql_engine_spark.streaming.windows import replay
 
     _enable_native_pushdown(spark)
     data_dir = tempfile.mkdtemp(prefix="minisql_sink_")
-    chk = tempfile.mkdtemp(prefix="chk_sink_")
     datasource.register(spark)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            _multi_file_events(spark, sf_dir)
-            .filter(F.col("event_id") % _TAIL_FEED_MOD == 0)
-            .select("event_id", "user_id", _cents("value").alias("cents"))
-            .coalesce(2)
-            .writeStream.format("minisql")
-            .option("path", data_dir)
-            .option("table", "sink_feed")
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    writer = (
+        _multi_file_events(spark, sf_dir)
+        .filter(F.col("event_id") % _TAIL_FEED_MOD == 0)
+        .select("event_id", "user_id", _cents("value").alias("cents"))
+        .coalesce(2)
+        .writeStream.format("minisql")
+        .option("path", data_dir)
+        .option("table", "sink_feed")
+        .trigger(availableNow=True)
+    )
+    replay(spark, writer, {"spark.sql.shuffle.partitions": "8"})
     back = (
         spark.read.format("minisql")
         .option("path", data_dir)
@@ -599,31 +590,17 @@ def stream_bitmap_distinct_counts(
     table and are joined back from the (tiny) type dictionary at
     read time.
     """
-    _enable_native_pushdown(spark)
     data_dir = tempfile.mkdtemp(prefix="minisql_bitmap_")
-    chk = tempfile.mkdtemp(prefix="chk_bitmap_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")  # 4: JVM merge ladder, see stream_to_df
-    try:
-        q = (
-            _multi_file_events(
-                spark,
-                sf_dir,
-                cols=("user_id", "event_type"),
-                schema="user_id long, event_type string",
-            )
-            .writeStream.foreachBatch(
-                lambda df, bid: merge_bitmap_batch(
-                    df, bid, data_dir, "type_bitmaps"
-                )
-            )
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    events = _multi_file_events(
+        spark,
+        sf_dir,
+        cols=("user_id", "event_type"),
+        schema="user_id long, event_type string",
+    )
+    # 4: JVM merge ladder, see stream_to_df
+    _merge_stream(
+        spark, events, merge_bitmap_batch, data_dir, "type_bitmaps", 4
+    )
     state = _read_state(spark, data_dir, "type_bitmaps",
                         schema="tid long, chunk long, mask long")
     counts = (
@@ -724,29 +701,15 @@ def stream_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from mini_sql_engine_spark.operators.analytics import psi_readout
 
-    _enable_native_pushdown(spark)
     data_dir = tempfile.mkdtemp(prefix="minisql_psi_")
-    chk = tempfile.mkdtemp(prefix="chk_psi_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")  # 4: JVM merge ladder, see stream_to_df
-    try:
-        q = (
-            _multi_file_events(
-                spark,
-                sf_dir,
-                cols=("ts", "event_type", "value"),
-                schema="ts timestamp, event_type string, value double",
-            )
-            .writeStream.foreachBatch(
-                lambda df, bid: merge_psi_batch(df, bid, data_dir, "psi_bins")
-            )
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    events = _multi_file_events(
+        spark,
+        sf_dir,
+        cols=("ts", "event_type", "value"),
+        schema="ts timestamp, event_type string, value double",
+    )
+    # 4: JVM merge ladder, see stream_to_df
+    _merge_stream(spark, events, merge_psi_batch, data_dir, "psi_bins", 4)
     state = _read_state(spark, data_dir, "psi_bins",
                         schema="bkey long, n long")
     per_bin = (
@@ -895,24 +858,11 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashes. This is THE frequent-items pattern when the stream cannot
     hold a per-token state table.
     """
-    _enable_native_pushdown(spark)
     data_dir = tempfile.mkdtemp(prefix="minisql_mg_")
-    chk = tempfile.mkdtemp(prefix="chk_mg_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            _multi_file_docs(spark, sf_dir)
-            .writeStream.foreachBatch(
-                lambda df, bid: merge_mg_batch(df, bid, data_dir, "mg_counters")
-            )
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _merge_stream(
+        spark, _multi_file_docs(spark, sf_dir), merge_mg_batch, data_dir,
+        "mg_counters", 8,
+    )
     from mini_sql_engine_spark.catalog import load_table
 
     candidates = (
@@ -1132,26 +1082,12 @@ def stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         QSK_TARGETS,
     )
 
-    _enable_native_pushdown(spark)
     data_dir = tempfile.mkdtemp(prefix="minisql_qsk_")
-    chk = tempfile.mkdtemp(prefix="chk_qsk_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")  # 4: JVM merge ladder, see stream_to_df
-    try:
-        q = (
-            _multi_file_events(spark, sf_dir)
-            .writeStream.foreachBatch(
-                lambda df, bid: merge_qsketch_batch(
-                    df, bid, data_dir, "qsk_state"
-                )
-            )
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    # 4: JVM merge ladder, see stream_to_df
+    _merge_stream(
+        spark, _multi_file_events(spark, sf_dir), merge_qsketch_batch,
+        data_dir, "qsk_state", 4,
+    )
 
     state = _read_state(spark, data_dir, "qsk_state", schema="val long, g long")
     summ = (
@@ -1327,29 +1263,11 @@ def stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct-count twin of the MG heavy-hitter design: both keep a
     provably-sufficient constant-size candidate set, and merge = union
     keeps replays free."""
-    _enable_native_pushdown(spark)
     data_dir = tempfile.mkdtemp(prefix="minisql_kmv_")
-    chk = tempfile.mkdtemp(prefix="chk_kmv_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            _multi_file_events(
-                spark,
-                sf_dir,
-                cols=("user_id",),
-                schema="user_id long",
-            )
-            .writeStream.foreachBatch(
-                lambda df, bid: merge_kmv_batch(df, bid, data_dir, "kmv_state")
-            )
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    events = _multi_file_events(
+        spark, sf_dir, cols=("user_id",), schema="user_id long"
+    )
+    _merge_stream(spark, events, merge_kmv_batch, data_dir, "kmv_state", 8)
     state = _read_state(
         spark, data_dir, "kmv_state", schema="h long, meta long"
     )
@@ -1595,38 +1513,21 @@ def stream_merkle_root(spark: SparkSession, sf_dir: str) -> DataFrame:
     store; the
     single-file demo format caps it (the real target is a keyed table
     format, the operator shape is unchanged)."""
-    _enable_native_pushdown(spark)
     data_dir = tempfile.mkdtemp(prefix="minisql_mks_")
-    chk = tempfile.mkdtemp(prefix="chk_mks_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")  # 4: JVM merge ladder, see stream_to_df
-    # Static planning for the ladder (round 10): every shuffle in the
-    # per-batch ladder is bounded by the MICRO-BATCH (only buckets the
-    # batch touches are regrouped — O(batch·arity) rows, never state
-    # size) and every join is statically broadcast-hinted, so AQE has
-    # nothing to re-plan — it only adds a stage-materialization
-    # round-trip per exchange, and the ladder chains MKS_LEVELS+2 of
-    # them per batch (measured 4.25→3.41 s warm at sf0.1 with AQE
-    # off). That argument is scale-independent: batch-bounded shuffles
-    # stay small at any corpus size. Restored in finally.
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        q = (
-            _multi_file_docs(spark, sf_dir)
-            .writeStream.foreachBatch(
-                lambda df, bid: merge_merkle_batch(
-                    df, bid, data_dir, "mks_tree"
-                )
-            )
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+    # 4: JVM merge ladder, see stream_to_df. Static planning for the
+    # ladder (round 10): every shuffle in the per-batch ladder is
+    # bounded by the MICRO-BATCH (only buckets the batch touches are
+    # regrouped — O(batch·arity) rows, never state size) and every join
+    # is statically broadcast-hinted, so AQE has nothing to re-plan —
+    # it only adds a stage-materialization round-trip per exchange, and
+    # the ladder chains MKS_LEVELS+2 of them per batch (measured
+    # 4.25→3.41 s warm at sf0.1 with AQE off). That argument is
+    # scale-independent: batch-bounded shuffles stay small at any
+    # corpus size.
+    _merge_stream(
+        spark, _multi_file_docs(spark, sf_dir), merge_merkle_batch,
+        data_dir, "mks_tree", 4, aqe=False,
+    )
     state = _read_state(
         spark, data_dir, "mks_tree", schema="level long, b long, h long"
     )
@@ -1830,37 +1731,19 @@ def stream_band_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     |distinct bands| rows ~ 4·n_docs longs+hashes — registry-sized by
     necessity (it IS the index); a real deployment keys it by band
     prefix in a keyed table format, the merge shape is unchanged."""
-    _enable_native_pushdown(spark)
     data_dir = tempfile.mkdtemp(prefix="minisql_bnd_")
-    chk = tempfile.mkdtemp(prefix="chk_bnd_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")  # 4: JVM merge ladder, see stream_to_df
     # Static planning (round 10, same argument as stream_merkle_root):
     # the per-batch merge shuffles O(batch·bands) thin rows with a
     # map-side-combined min and the audit joins the batch-bounded
     # delta logs — nothing for AQE to re-plan, one stage round-trip
-    # per exchange saved (3.57→3.14 s warm at sf0.1). Restored in
-    # finally.
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    # per exchange saved (3.57→3.14 s warm at sf0.1).
     try:
-        q = (
-            _multi_file_docs(spark, sf_dir)
-            .writeStream.foreachBatch(
-                lambda df, bid: merge_band_batch(
-                    df, bid, data_dir, "band_registry"
-                )
-            )
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
+        _merge_stream(
+            spark, _multi_file_docs(spark, sf_dir), merge_band_batch,
+            data_dir, "band_registry", 4, aqe=False,
         )
-        q.awaitTermination()
-        deltas = _BND_LOG.pop(data_dir, [])
     finally:
-        _BND_LOG.pop(data_dir, None)
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+        deltas = _BND_LOG.pop(data_dir, [])
     registry = _read_state(
         spark, data_dir, "band_registry", schema="band long, mn long"
     ).filter(F.col("band") != _BND_SENTINEL)

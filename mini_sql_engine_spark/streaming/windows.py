@@ -8,6 +8,12 @@ windowed aggregation and a custom stateful operator
 parquet and returns a DataFrame — which the driver then checks against
 the SAME DuckDB oracle as the batch version (stream-batch parity).
 
+Every stream in the engine runs through `replay`. Conf rule: a
+streaming query snapshots the session conf when it STARTS (Spark clones
+the session inside ``start()``), so per-query overrides are set only
+around ``start()`` and the shared session never sees them during the
+drain.
+
 Scale notes:
 - watermark bounds state: the windowed agg keeps only windows newer
   than max(ts) - delay; state store size is O(open windows × groups),
@@ -24,13 +30,16 @@ from __future__ import annotations
 
 import hashlib
 import os
+import shutil
 import tempfile
+import threading
 import uuid
 from collections.abc import Callable, Iterator
 
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 from pyspark.sql.types import (
@@ -70,9 +79,10 @@ def table_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     digest = hashlib.md5(f"{sf_dir}:{table}".encode()).hexdigest()[:8]
     stage = os.path.join(tempfile.gettempdir(), f"{table}_stream_{digest}")
     os.makedirs(stage, exist_ok=True)
-    link = os.path.join(stage, f"{table}.parquet")
-    if not os.path.exists(link):
-        os.symlink(src, link)
+    try:  # concurrent replays may race to stage the same link
+        os.symlink(src, os.path.join(stage, f"{table}.parquet"))
+    except FileExistsError:
+        pass
     return (
         spark.readStream.schema(raw_schema)
         .option("maxFilesPerTrigger", 1)
@@ -330,84 +340,102 @@ def click_purchase_join(
     ).select(F.col("c_user").alias("user_id"), "click_id", "purchase_id")
 
 
-def stream_to_df(
-    spark: SparkSession,
-    streaming_df: DataFrame,
-    output_mode: str,
-    dedupe_keys: list[str] | None = None,
-    order_col: str | None = None,
-    final_nodata: bool = True,
-    parts: int = 8,
-) -> DataFrame:
-    """Run a streaming DF to completion into a memory sink; return the
-    result table. In update mode with multiple batches, keep only the
-    last emission per key (`dedupe_keys` + monotonic `order_col`).
+# Serializes replay()'s set-overrides / start() / restore window, so
+# two replays never interleave their saves and restores.
+_START_LOCK = threading.Lock()
 
-    ``final_nodata=False`` disables no-data micro-batches
-    (`spark.sql.streaming.noDataMicroBatches.enabled`) for this query.
-    The final no-data batch exists to advance the watermark and FLUSH
-    state whose emission waits on it — append-mode windowed aggregates
-    and outer-join null rows. A query whose every output row is emitted
-    in the batch that produced it (inner joins, complete-mode
-    aggregates that re-emit full state each batch, stateful operators
-    with NoTimeout, streaming dedup) gets nothing from that batch and
-    pays a full zero-row trigger for it — measured ~1.1 s per replay at
-    8 state partitions (state-store load/commit × partitions + plan +
-    task rounds, data-independent). Callers assert the semantic
-    property, the oracle sweep pins the results."""
+NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
+
+
+def replay(
+    spark: SparkSession,
+    writer: DataStreamWriter,
+    confs: dict[str, str],
+    memory: bool = False,
+) -> DataFrame | None:
+    """Run ``writer``'s streaming query to completion; the one place
+    this engine starts a stream.
+
+    The caller's writer carries the sink and trigger; this owns the
+    rest. ``confs`` are set on the session only around ``start()``:
+    Spark clones the session conf into the stream's own session inside
+    ``start()``, and shuffle partitions (= state-store count), the
+    state-store provider and no-data micro-batches are all read from
+    that clone, as is the conf of the DataFrame a foreachBatch body
+    gets. So the overrides apply to every micro-batch while the shared
+    session reads its own values again as soon as ``start()`` returns.
+    The lock keeps a concurrent replay from snapshotting another's
+    overrides or restoring over them.
+
+    The checkpoint dir is created here and removed after the drain.
+    With ``memory=True`` the writer is a memory sink: the result table
+    is bound with ``spark.table`` and its temp view dropped — the bound
+    DataFrame keeps reading the sink's rows."""
+    chk = tempfile.mkdtemp(prefix="chk_")
     name = f"mem_{uuid.uuid4().hex[:12]}"
-    chk = os.path.join(tempfile.gettempdir(), f"chk_{name}")
-    # state-store count = shuffle partitions at query START (fixed for
-    # the query's lifetime). This replay is a bounded batch — 8 state
-    # partitions beat 32 stores' open/commit overhead; a production
-    # long-lived stream would size this to key cardinality instead.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    prev_nodata = spark.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled"
-    )
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    # Round 10 (same rule as the merkle/band streams): every shuffle in
-    # these replays is bounded by the micro-batch and the state is
-    # 8-partition by construction, so AQE only adds a per-exchange
-    # stage-materialization round-trip PER BATCH — pure fixed cost.
-    # Restored in finally; production long-lived streams keep AQE off
-    # for streaming plans anyway (Spark ignores AQE in continuous
-    # stateful stages) — this pins the same behavior for the replay.
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    if not final_nodata:
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", "false"
-        )
+    if memory:
+        writer = writer.queryName(name)
+    out = None
     try:
-        q = (
-            streaming_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", chk)
-            .start()
-        )
+        with _START_LOCK:
+            prev = {k: spark.conf.get(k) for k in confs}
+            for k, v in confs.items():
+                spark.conf.set(k, v)
+            try:
+                q = writer.option("checkpointLocation", chk).start()
+            finally:
+                for k, v in prev.items():
+                    spark.conf.set(k, v)
         try:
             q.processAllAvailable()
         finally:
             q.stop()
+        if memory:
+            out = spark.table(name)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_nodata
-        )
-    out = spark.table(name)
-    if dedupe_keys and order_col:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy(*dedupe_keys).orderBy(F.col(order_col).desc())
-        out = (
-            out.withColumn("_rn", F.row_number().over(w))
-            .filter("_rn = 1")
-            .drop("_rn")
-        )
+        if memory:
+            spark.catalog.dropTempView(name)
+        shutil.rmtree(chk, ignore_errors=True)
     return out
+
+
+def stream_to_df(
+    spark: SparkSession,
+    streaming_df: DataFrame,
+    output_mode: str,
+    final_nodata: bool = True,
+    parts: int = 8,
+) -> DataFrame:
+    """Run a streaming DF to completion into a memory sink; return the
+    result table.
+
+    ``parts`` is the shuffle-partition count, i.e. the state-store
+    count, fixed for the query's lifetime. This replay is a bounded
+    batch: 8 (4 for JVM-stateful operators) state partitions beat 32
+    stores' open/commit overhead; a production long-lived stream would
+    size this to key cardinality instead. AQE needs no override here:
+    Spark plans memory-sink micro-batches without it.
+
+    ``final_nodata=False`` disables no-data micro-batches for this
+    query. The final no-data batch exists to advance the watermark and
+    FLUSH state whose emission waits on it — append-mode windowed
+    aggregates and outer-join null rows. A query whose every output
+    row is emitted in the batch that produced it (inner joins,
+    complete-mode aggregates that re-emit full state each batch,
+    stateful operators with NoTimeout, streaming dedup) gets nothing
+    from that batch and pays a full zero-row trigger for it — measured
+    ~1.1 s per replay at 8 state partitions (state-store load/commit ×
+    partitions + plan + task rounds, data-independent). Callers assert
+    the semantic property, the oracle sweep pins the results."""
+    overrides = {"spark.sql.shuffle.partitions": str(parts)}
+    if not final_nodata:
+        overrides[NO_DATA_BATCHES] = "false"
+    return replay(
+        spark,
+        streaming_df.writeStream.format("memory").outputMode(output_mode),
+        overrides,
+        memory=True,
+    )
 
 
 # ---- driver-contract queries (stream-batch parity oracles) -----------------
@@ -529,32 +557,32 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_ROCKSDB = (
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+)
+
+
 def stream_tws_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """transformWithStateInPandas replay — requires the RocksDB state
-    store provider; the conf is set for this query and restored (the
-    provider is fixed per streaming query at start, so this does not
-    disturb concurrently defined queries).
+    store provider, passed as a start-time override (see ``replay``),
+    so the shared session keeps its own provider.
 
     ENVIRONMENT GATE: the TWS python⇄JVM state protocol is protobuf-
     based; without the `protobuf` package the driver worker dies in
     pre-init (STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE). Not in
     QUERIES for that reason — the gated test exercises it where the
     dependency exists."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    writer = (
+        tws_user_totals(events_stream(spark, sf_dir))
+        .writeStream.format("memory")
+        .outputMode("update")
     )
-    try:
-        return stream_to_df(
-            spark,
-            tws_user_totals(events_stream(spark, sf_dir)),
-            "update",
-            final_nodata=False,  # NoTimeout: see stream_user_totals
-        )
-    finally:
-        spark.conf.set(key, prev)
+    confs = {
+        "spark.sql.shuffle.partitions": "8",
+        NO_DATA_BATCHES: "false",  # NoTimeout: see stream_user_totals
+        "spark.sql.streaming.stateStore.providerClass": _ROCKSDB,
+    }
+    return replay(spark, writer, confs, memory=True)
 
 
 def stream_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:

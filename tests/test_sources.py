@@ -761,3 +761,29 @@ def test_read_state_failfast_on_schema_mismatch(tmp_path, spark):
     bad = _read_state(spark, d, "t", schema="a long, b long")
     with pytest.raises(Exception, match="MALFORMED_RECORD|FAILFAST"):
         bad.collect()
+
+
+def test_session_memos_rebind_on_reused_session_id(spark, sf_dir):
+    """The scan memo and the parity Engine cache key on id(spark), and
+    a stopped session's id can be reused by a new one. An entry bound
+    to another session under the caller's id must be replaced by a
+    fresh object bound to the caller, never handed out."""
+    from mini_sql_engine_spark import catalog
+    from mini_sql_engine_spark.engine import Engine
+    from mini_sql_engine_spark.operators import parity
+
+    other = spark.newSession()
+    scan_key = (id(spark), "nation", catalog.content_token(sf_dir, "nation"))
+    catalog._SCAN_MEMO[scan_key] = other.read.parquet(f"{sf_dir}/nation.parquet")
+    df = load_table(spark, sf_dir, "nation")
+    assert df.sparkSession is spark
+    assert catalog._SCAN_MEMO[scan_key] is df
+    want = pd.read_parquet(f"{sf_dir}/nation.parquet")
+    assert df.count() == len(want)
+
+    eng_key = (id(spark), sf_dir)
+    parity._ENGINE_CACHE[eng_key] = Engine.from_parquet_dir(other, sf_dir)
+    eng = parity.engine_for(spark, sf_dir)
+    assert eng.spark is spark
+    assert parity._ENGINE_CACHE[eng_key] is eng
+    assert eng.sql("SELECT * FROM nation;").count() == len(want)

@@ -3,7 +3,9 @@ watermark late-data dropping."""
 
 from __future__ import annotations
 
+import ast
 import os
+import pathlib
 import time
 
 import pytest
@@ -487,3 +489,117 @@ def test_qsketch_merge_replay_and_bound(spark, tmp_path):
     n_lt = sum(1 for v in vals if v < est)
     assert n_le >= t
     assert n_lt < t + slack
+
+
+# the session confs a replay overrides at start()
+_REPLAY_CONFS = (
+    "spark.sql.shuffle.partitions",
+    "spark.sql.adaptive.enabled",
+    "spark.sql.streaming.noDataMicroBatches.enabled",
+    "spark.sql.streaming.stateStore.providerClass",
+)
+
+
+def test_concurrent_replays_are_exact_and_leave_conf(spark, sf_dir):
+    """An outer-join replay (needs its final no-data flush), a replay
+    that disables no-data batches, and a batch query, started together
+    from three threads: all three stay oracle-exact and the shared
+    session conf ends where it began. Replays set their overrides only
+    around start() under one lock, so neither can snapshot the other's
+    overrides nor restore over them."""
+    import threading
+
+    import __spark_entry__ as entry
+    from tests.oracle_utils import assert_frames_match, duckdb_run
+
+    queries, oracles = entry.queries(), entry.oracle_sql()
+    names = ["stream_click_purchase_full", "stream_tumbling_counts", "flagship"]
+    want = {n: duckdb_run(oracles[n], sf_dir) for n in names}
+    before = {k: spark.conf.get(k) for k in _REPLAY_CONFS}
+    for _ in range(3):
+        barrier = threading.Barrier(len(names))
+        got, errors = {}, []
+
+        def run(name):
+            try:
+                barrier.wait(timeout=120)
+                got[name] = queries[name](spark, sf_dir).toPandas()
+            except Exception as exc:  # reported below
+                errors.append((name, exc))
+
+        threads = [threading.Thread(target=run, args=(n,)) for n in names]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=600)
+        assert not any(t.is_alive() for t in threads)
+        assert not errors, errors
+        for n in names:
+            assert_frames_match(got[n], want[n], n)
+    assert {k: spark.conf.get(k) for k in _REPLAY_CONFS} == before
+
+
+def test_replays_remove_checkpoint_and_memory_view(spark, sf_dir):
+    """A memory-sink replay and a foreachBatch replay leave no
+    checkpoint dir and no sink view behind, and the DataFrames they
+    return still read the right rows afterwards."""
+    import tempfile
+
+    import __spark_entry__ as entry
+    from tests.oracle_utils import assert_frames_match, duckdb_run
+
+    def chk_dirs():
+        return {d for d in os.listdir(tempfile.gettempdir()) if d.startswith("chk_")}
+
+    def mem_views():
+        return {
+            t.name for t in spark.catalog.listTables() if t.name.startswith("mem_")
+        }
+
+    queries, oracles = entry.queries(), entry.oracle_sql()
+    names = ["stream_tumbling_counts", "stream_upsert_totals"]
+    chk0, views0 = chk_dirs(), mem_views()
+    got = {n: queries[n](spark, sf_dir) for n in names}
+    assert chk_dirs() - chk0 == set()
+    assert mem_views() - views0 == set()
+    for n in names:
+        assert_frames_match(
+            got[n].toPandas(), duckdb_run(oracles[n], sf_dir), n
+        )
+
+
+def test_replay_is_the_only_stream_start_and_conf_override():
+    """Structural pin: the package starts a streaming writer in exactly
+    one place, `windows.replay`, and nothing else under streaming/
+    sets the confs a replay overrides — each runner passes them to
+    replay() instead of mutating the shared session."""
+    import mini_sql_engine_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    starts, overrides = [], []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        calls = [
+            (getattr(top, "name", None), node)  # enclosing top-level def
+            for top in ast.parse(path.read_text()).body
+            for node in ast.walk(top)
+            if isinstance(node, ast.Call)
+        ]
+        for fn, call in calls:
+            f = call.func
+            if not isinstance(f, ast.Attribute):
+                continue
+            if f.attr == "start" and not call.args:
+                starts.append((rel, fn))
+            is_conf_set = (
+                f.attr == "set"
+                and isinstance(f.value, ast.Attribute)
+                and f.value.attr == "conf"
+            )
+            if rel.startswith("streaming/") and is_conf_set and fn != "replay":
+                key = call.args[0]
+                # a non-literal key could be any of them
+                if not isinstance(key, ast.Constant) or key.value in _REPLAY_CONFS:
+                    overrides.append((rel, fn, ast.unparse(key)))
+    assert starts == [("streaming/windows.py", "replay")]
+    assert overrides == []
